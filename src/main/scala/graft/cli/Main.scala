@@ -2,7 +2,6 @@ package graft.cli
 
 import graft.core.{Archive, DirHash}
 import graft.hash.{Algos, HashSpec}
-import org.apache.spark.sql.SparkSession
 
 /** CLI flag-compatible with the reference's `_main`
   * (/root/reference/dirhash.py:582-687): positional dir;
@@ -58,20 +57,9 @@ object Main {
       }
     }
 
-    val builder = SparkSession.builder()
-      .appName("DirHash")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // under spark-submit the master comes from the launcher config; when run
-    // directly (the reference's `SparkContext(appName=...)` path) fall back
-    // to all local cores
-    if (!new org.apache.spark.SparkConf().contains("spark.master"))
-      builder.master("local[*]")
-    // stop only a session we created — the reference likewise stops its
-    // SparkContext only when it wasn't handed one (dirhash.py:325-335)
-    val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = builder.getOrCreate()
-    try {
+    // the library's create-if-absent session: a session we create is
+    // stopped afterwards, a caller's is left running
+    DirHash.withSession { spark =>
       val expected: Option[String] =
         if (args.checkName) {
           // verify the directory's basename as its own hash string
@@ -120,7 +108,7 @@ object Main {
               0
           }
       }
-    } finally if (!preexisting) spark.stop()
+    }
   }
 
   @annotation.tailrec

@@ -1,8 +1,7 @@
 package graft.core
 
-import graft.fs.FileEntry
-import graft.hash.Algos
-import org.apache.hadoop.conf.Configuration
+import graft.fs.{FileEntry, Listing}
+import graft.hash.{Algos, Digest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
@@ -12,165 +11,168 @@ import org.apache.spark.util.SerializableConfiguration
   */
 final case class ChunkSpec(relPath: String, absPath: String, idx: Long, offset: Long, len: Long)
 
-/** Digest of one chunk, keyed for the total sort. */
-final case class ChunkDigest(relPath: String, idx: Long, digest: Array[Byte])
+/** Chunks `[fromIdx, untilIdx)` of the `size`-byte file `relPath`: the
+  * part of one file that falls in one slice of the plan.
+  */
+private[core] final case class ChunkRun(relPath: String, size: Long, fromIdx: Long, untilIdx: Long)
 
-/** Fixed-length chunking as driver-planned range reads.
+/** Fixed-length chunking as driver-planned contiguous slices.
   *
   * The reference uses a custom Hadoop InputFormat whose splits are aligned
   * to record multiples (/root/reference/FixedLengthBinaryInputFormat.scala:
   * 41-85) and one RDD per file union-folded together
   * (/root/reference/dirhash.py:399-406) — a lineage chain that collapses at
-  * 10⁵+ files. Here the whole tree is ONE `Dataset[ChunkSpec]` (a row per
-  * chunk, planned from the listing's sizes), so Spark schedules uniformly
-  * across files and within large files, with no custom InputFormat and no
-  * union chain. Alignment is by construction; the short-final-chunk and
-  * empty-file→zero-chunks semantics match the reference's record reader
+  * 10⁵+ files — and then sorts the digests by (path, idx)
+  * (dirhash.py:413). Here the driver sorts the files by the UTF-8 bytes of
+  * their relative paths, which is the digest order the hash folds in, and
+  * cuts that chunk sequence into at most `4 × defaultParallelism`
+  * contiguous slices of about equal bytes. A slice is a few [[ChunkRun]]s,
+  * so the plan is O(#files + #slices) on the driver at any block size, and
+  * a large file spreads over several slices. One task digests one slice in
+  * order, so the collected digests arrive in (relPath, idx) order: the
+  * hash is one Spark job with no sort and no shuffle. Alignment is by
+  * construction; the short-final-chunk and empty-file→zero-chunks
+  * semantics match the reference's record reader
   * (/root/reference/FixedLengthBinaryRecordReader.scala:105-142).
   */
 object Chunker {
 
-  /** Plans chunk ranges for every regular file. Empty files yield no chunks
-    * (they still appear in the listing — SURVEY.md §1.3).
+  private val Zero = Array(0.toByte)
+
+  /** A fresh `algo` digest already fed the header of the chunk-digest
+    * layout (reference /root/reference/dirhash.py:288-303):
+    * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.
+    * The caller feeds `content` and finalizes.
     */
-  def planChunks(rootDir: String, entries: Seq[FileEntry], blockSize: Long): Seq[ChunkSpec] = {
-    require(blockSize > 0, s"block size must be positive: $blockSize")
-    val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
-    entries.iterator.filterNot(_.isDir).flatMap { fe =>
-      val nChunks = (fe.size + blockSize - 1) / blockSize // 0 for empty files
-      (0L until nChunks).map { i =>
-        val offset = i * blockSize
-        ChunkSpec(fe.relPath, s"$root/${fe.relPath}", i, offset,
-          math.min(blockSize, fe.size - offset))
-      }
-    }.toSeq
+  def chunkDigest(algo: String, relPathUtf8: Array[Byte], idx: Long): Digest = {
+    val d = Algos.get(algo)
+    d.update(relPathUtf8)
+    d.update(Zero)
+    d.update(java.lang.Long.toString(idx))
+    d.update(Zero)
+    d
   }
+
+  private def chunksOf(size: Long, blockSize: Long): Long =
+    if (size == 0) 0 else (size - 1) / blockSize + 1
 
   /** Total planned chunks for a listing — O(#files) driver arithmetic,
     * no spec materialization.
     */
   def countChunks(entries: Seq[FileEntry], blockSize: Long): Long =
-    entries.iterator.filterNot(_.isDir)
-      .map(fe => (fe.size + blockSize - 1) / blockSize).sum
+    entries.iterator.filterNot(_.isDir).map(fe => chunksOf(fe.size, blockSize)).sum
 
-  /** The chunk plan as a Dataset. Plans up to `driverSpecLimit` specs
-    * take the driver Seq path (byte-identical to [[planChunks]], zero
-    * extra jobs — the default covers 100 TB at the 128 MiB default
-    * block size, ~10⁶ specs); above it the expansion runs as a
-    * distributed flatMap over the FILE list, so the driver holds
-    * O(#files), never O(#chunks). The old always-driver path made
-    * plan-time memory scale inversely with block size: 100 TB at 1 MiB
-    * blocks is 10⁸ specs — a driver OOM for choosing a small `-b`,
-    * which the reference's own collect bound never imposed at plan
-    * time. A single huge file expands lazily (iterator flatMap) inside
-    * its task and is immediately re-spread by digestChunks'
-    * range-repartition on (path, idx).
+  /** Cuts the chunks of every regular file, in (utf8(relPath), idx) order,
+    * into at most `maxSlices` contiguous slices of about equal bytes. Each
+    * run ends a file or a slice, so there are at most #files + #slices.
     */
-  def planChunksDataset(spark: SparkSession, rootDir: String,
-      entries: Seq[FileEntry], blockSize: Long,
-      driverSpecLimit: Long = 4000000L,
-      knownChunkCount: Long = -1L): Dataset[ChunkSpec] = {
-    import spark.implicits._
+  private[core] def slices(entries: Seq[FileEntry], blockSize: Long,
+      maxSlices: Int): Vector[Vector[ChunkRun]] = {
     require(blockSize > 0, s"block size must be positive: $blockSize")
-    // callers that already hold the count (hashDirectoryRaw passes it to
-    // digestChunks' range sizing too) hand it in, so the O(#files) pass
-    // runs once per hash and the two sites cannot disagree
-    val nChunks =
-      if (knownChunkCount >= 0) knownChunkCount
-      else countChunks(entries, blockSize)
-    if (nChunks <= driverSpecLimit)
-      spark.createDataset(planChunks(rootDir, entries, blockSize))
-    else {
-      val root = graft.fs.Listing.stripTrailingSlashes(rootDir)
-      val files = entries.filterNot(_.isDir)
-      val bs = blockSize
-      spark.createDataset(files)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .flatMap { fe =>
-          val nChunks = (fe.size + bs - 1) / bs // 0 for empty files
-          (0L until nChunks).iterator.map { i =>
-            val offset = i * bs
-            ChunkSpec(fe.relPath, s"$root/${fe.relPath}", i, offset,
-              math.min(bs, fe.size - offset))
-          }
+    val files = entries.filter(fe => !fe.isDir && fe.size > 0)
+      .sortBy(_.relPath)(Listing.utf8Ordering)
+    val totalBytes = files.iterator.map(_.size).sum
+    val nSlices = math.max(1L, math.min(maxSlices.toLong, countChunks(files, blockSize)))
+    val target = (totalBytes + nSlices - 1) / nSlices // bytes per slice
+    val out = Vector.newBuilder[Vector[ChunkRun]]
+    val slice = Vector.newBuilder[ChunkRun]
+    var sliceBytes = 0L
+    files.foreach { fe =>
+      val nChunks = chunksOf(fe.size, blockSize)
+      var i = 0L
+      while (i < nChunks) {
+        // the fewest chunks that fill the slice, or the rest of the file
+        val j = math.min(nChunks, i + (target - sliceBytes - 1) / blockSize + 1)
+        slice += ChunkRun(fe.relPath, fe.size, i, j)
+        sliceBytes += math.min(j * blockSize, fe.size) - i * blockSize
+        i = j
+        if (sliceBytes >= target) {
+          out += slice.result()
+          slice.clear()
+          sliceBytes = 0
         }
+      }
+    }
+    if (sliceBytes > 0) out += slice.result()
+    out.result()
+  }
+
+  private def maxSlices(spark: SparkSession): Int =
+    4 * spark.sparkContext.defaultParallelism
+
+  /** The chunks of one run, streamed: offsets and lengths are computed
+    * here and nowhere else.
+    */
+  private def specs(root: String, run: ChunkRun, blockSize: Long): Iterator[ChunkSpec] = {
+    val absPath = s"$root/${run.relPath}"
+    Iterator.iterate(run.fromIdx)(_ + 1).takeWhile(_ < run.untilIdx).map { i =>
+      val offset = i * blockSize
+      ChunkSpec(run.relPath, absPath, i, offset, math.min(blockSize, run.size - offset))
     }
   }
 
-  /** Computes the domain-separated digest of every planned chunk, streaming
-    * file bytes through the digest in 64 KiB reads (never materializing a
-    * whole chunk — the default block size is 128 MiB). Specs are
-    * range-partitioned and sorted by (path, offset) within partitions so a
-    * task reads each file sequentially.
-    *
-    * Digest layout per chunk (reference /root/reference/dirhash.py:288-303):
-    * `H( utf8(relPath) || 0x00 || ascii_decimal(idx) || 0x00 || content )`.
+  /** Plans chunk ranges for every regular file, in (utf8(relPath), idx)
+    * order. Empty files yield no chunks (they still appear in the listing
+    * — SURVEY.md §1.3).
     */
-  def digestChunks(
-      spark: SparkSession,
-      specs: Seq[ChunkSpec],
-      algo: String,
-      hadoopConf: Configuration): Dataset[ChunkDigest] = {
-    import spark.implicits._
-    digestChunks(spark, spark.createDataset(specs), specs.size.toLong,
-      algo, hadoopConf)
+  def planChunks(rootDir: String, entries: Seq[FileEntry], blockSize: Long): Seq[ChunkSpec] = {
+    val root = Listing.stripTrailingSlashes(rootDir)
+    slices(entries, blockSize, 1).flatten.flatMap(specs(root, _, blockSize))
   }
 
-  /** Dataset-plan variant: `nSpecs` is the planned chunk count (cheap
-    * O(#files) arithmetic via [[countChunks]]) used to size the range
-    * partitioning without counting the Dataset.
+  /** The chunk plan as a lazy Dataset: the driver ships the slices and
+    * executors expand them, so building it runs no job and the driver
+    * never holds one object per chunk. `knownChunkCount` is ignored (the
+    * slice planner counts as it cuts); it stays so callers that pass it
+    * keep compiling.
     */
-  def digestChunks(
-      spark: SparkSession,
-      specs: Dataset[ChunkSpec],
-      nSpecs: Long,
-      algo: String,
-      hadoopConf: Configuration): Dataset[ChunkDigest] = {
+  def planChunksDataset(spark: SparkSession, rootDir: String,
+      entries: Seq[FileEntry], blockSize: Long,
+      knownChunkCount: Long = -1L): Dataset[ChunkSpec] = {
     import spark.implicits._
+    val root = Listing.stripTrailingSlashes(rootDir)
+    val plan = slices(entries, blockSize, maxSlices(spark))
+    spark.createDataset(spark.sparkContext.parallelize(plan, math.max(1, plan.size))
+      .flatMap(_.iterator.flatMap(specs(root, _, blockSize))))
+  }
+
+  /** The digest of every chunk under `rootDir`, in (utf8(relPath), idx)
+    * order: one Spark job of one task per slice, none for a tree without
+    * bytes. A task opens each file of its slice once and streams it
+    * through the digests in 64 KiB reads, never materializing a whole
+    * chunk (the default block size is 128 MiB).
+    */
+  def digestChunks(spark: SparkSession, rootDir: String,
+      entries: Seq[FileEntry], blockSize: Long, algo: String): Array[Array[Byte]] = {
     Algos.get(algo) // fail fast on the driver for unknown algorithms
-    val serConf = new SerializableConfiguration(hadoopConf)
-    val parallelism = spark.sparkContext.defaultParallelism
-    // ~4 specs per core up to the spec count, so large files fan out wide
-    // while tiny trees don't pay for empty tasks.
-    val nParts = math.max(1, math.min(nSpecs, parallelism * 4L)).toInt
-    specs
-      .repartitionByRange(nParts, $"absPath", $"idx")
-      .sortWithinPartitions($"absPath", $"idx")
-      .mapPartitions { it =>
-        val conf = serConf.value
-        val buf = new Array[Byte](64 * 1024)
-        var openPath: String = null
-        var in: org.apache.hadoop.fs.FSDataInputStream = null
-        def close(): Unit = if (in != null) { in.close(); in = null; openPath = null }
-        val digests = it.map { spec =>
-          if (openPath != spec.absPath) {
-            close()
-            val p = new Path(spec.absPath)
-            in = p.getFileSystem(conf).open(p)
-            openPath = spec.absPath
-          }
-          in.seek(spec.offset)
-          val d = Algos.get(algo)
-          d.update(spec.relPath)
-          d.update(Array(0.toByte))
-          d.update(spec.idx.toString)
-          d.update(Array(0.toByte))
-          var remaining = spec.len
-          while (remaining > 0) {
-            val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-            if (n < 0)
-              throw new java.io.IOException(
-                s"unexpected EOF in ${spec.absPath} at chunk ${spec.idx}")
-            d.update(buf, 0, n)
-            remaining -= n
-          }
-          ChunkDigest(spec.relPath, spec.idx, d.digest())
-        }
-        new Iterator[ChunkDigest] {
-          def hasNext: Boolean = { val h = digests.hasNext; if (!h) close(); h }
-          def next(): ChunkDigest = digests.next()
-        }
+    val plan = slices(entries, blockSize, maxSlices(spark))
+    val root = Listing.stripTrailingSlashes(rootDir)
+    val serConf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    if (plan.isEmpty) Array.empty
+    else spark.sparkContext.parallelize(plan, plan.size).mapPartitions { it =>
+      val buf = new Array[Byte](64 * 1024)
+      it.flatten.flatMap { run =>
+        val pathUtf8 = run.relPath.getBytes("UTF-8")
+        val p = new Path(s"$root/${run.relPath}")
+        val in = Listing.fileSystem(p, serConf.value).open(p)
+        try {
+          in.seek(run.fromIdx * blockSize)
+          specs(root, run, blockSize).map { spec =>
+            val d = chunkDigest(algo, pathUtf8, spec.idx)
+            var remaining = spec.len
+            while (remaining > 0) {
+              val n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+              if (n < 0)
+                throw new java.io.IOException(
+                  s"unexpected EOF in ${spec.absPath} at chunk ${spec.idx}")
+              d.update(buf, 0, n)
+              remaining -= n
+            }
+            d.digest()
+          }.toVector
+        } finally in.close()
       }
+    }.collect()
   }
 
   /** Raw chunk bytes of a single file — test/debug surface mirroring the
@@ -180,8 +182,7 @@ object Chunker {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val size = fs.getFileStatus(p).getLen
+    val size = Listing.fileSystem(p, conf).getFileStatus(p).getLen
     val specs = planChunks(
       p.getParent.toUri.getPath,
       Seq(FileEntry(p.getName, isDir = false, size)),
@@ -189,7 +190,7 @@ object Chunker {
     val serConf = new SerializableConfiguration(conf)
     spark.createDataset(specs).map { spec =>
       val fp = new Path(spec.absPath)
-      val in = fp.getFileSystem(serConf.value).open(fp)
+      val in = Listing.fileSystem(fp, serConf.value).open(fp)
       try {
         val out = new Array[Byte](spec.len.toInt)
         in.seek(spec.offset)

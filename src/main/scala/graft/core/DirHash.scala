@@ -13,10 +13,12 @@ final case class HashComparisonResult(matches: Boolean, actualHash: String)
   * (/root/reference/dirhash.py:307-459), Spark-first:
   *
   *   1. driver: recursive listing (files + dirs, empty dirs included)
-  *   2. executors: chunk-digest every block of every file (one Dataset of
-  *      planned range reads — no per-file RDD union chain)
-  *   3. one total sort of the digests by (relPath, idx) — the pipeline's
-  *      single shuffle, same as the reference's `sortBy` (dirhash.py:413)
+  *   2. driver: the chunk plan, cut into contiguous slices of the files in
+  *      (utf8(relPath), idx) order ([[Chunker]])
+  *   3. executors: one job digests every block, a task per slice; the
+  *      collected digests are already in (relPath, idx) order, so the
+  *      reference's `sortBy` (dirhash.py:413) has no counterpart and the
+  *      hash runs no shuffle
   *   4. driver: sequential, order-dependent digest fold (deliberately NOT a
   *      Spark aggregation — it is non-associative and non-commutative,
   *      SURVEY.md §2.4). Collected rows are 28-64 B digests, so driver
@@ -30,7 +32,7 @@ object DirHash {
     * (/root/reference/dirhash.py:325-335): a library caller gets the
     * same no-arguments contract the CLI user gets.
     */
-  private def withSession[A](body: SparkSession => A): A =
+  private[graft] def withSession[A](body: SparkSession => A): A =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
       case Some(s) => body(s)
       case None =>
@@ -39,10 +41,9 @@ object DirHash {
         // context we did not create (the reference only ever stops its
         // own, dirhash.py:327-332)
         val borrowedContext = org.apache.spark.SparkEnv.get != null
-        val builder = SparkSession.builder()
-          .appName("DirHash")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        val builder = SparkSession.builder().appName("DirHash")
+        // under spark-submit the master comes from the launcher config;
+        // run directly, fall back to all local cores
         if (!new org.apache.spark.SparkConf().contains("spark.master"))
           builder.master("local[*]")
         val spark = builder.getOrCreate()
@@ -70,20 +71,8 @@ object DirHash {
     * (reference `hash_directory_raw`, /root/reference/dirhash.py:307-444)
     */
   def hashDirectoryRaw(spark: SparkSession, dir: String, algo: String, blockSize: Long): String = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val entries = Listing.list(dir, hadoopConf)
-
-    // Dataset-side plan: O(#files) on the driver regardless of block
-    // size (the digest COLLECT below stays driver-bounded by design —
-    // that bound is the reference's own spec)
-    val nChunks = Chunker.countChunks(entries, blockSize)
-    val specs = Chunker.planChunksDataset(spark, dir, entries, blockSize,
-      knownChunkCount = nChunks)
-    val sortedDigests = Chunker.digestChunks(spark, specs,
-      nChunks, algo, hadoopConf)
-      .orderBy("relPath", "idx") // UTF8 binary order == Python code-point order
-      .collect()
-
+    val entries = Listing.list(dir, spark.sparkContext.hadoopConfiguration)
+    val digests = Chunker.digestChunks(spark, dir, entries, blockSize, algo)
     val allEntries = entries.map(_.relPath).sorted(Listing.utf8Ordering)
 
     // Final fold (reference /root/reference/dirhash.py:422-441):
@@ -101,7 +90,7 @@ object DirHash {
       firstEntry = false
     }
     h.update(zero)
-    sortedDigests.foreach(cd => h.update(cd.digest))
+    digests.foreach(d => h.update(d))
     Algos.hex(h.digest())
   }
 

@@ -1,7 +1,7 @@
 package graft.fs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /** One entry of a recursive directory listing.
   *
@@ -22,6 +22,19 @@ final case class FileEntry(relPath: String, isDir: Boolean, size: Long)
   */
 object Listing {
 
+  /** The file system of `p` with any checksum wrapper removed. Listing and
+    * chunk reads both go through it: Hadoop's `ChecksumFileSystem` (the
+    * default for `file:`) hides user files named `.*.crc` from
+    * `listStatus`, and builds a `.name.crc` sidecar path on every open,
+    * which throws `URISyntaxException` for a name holding a `:`. A hash
+    * covers the tree's files as they are, so neither may happen.
+    */
+  def fileSystem(p: Path, hadoopConf: Configuration): FileSystem =
+    p.getFileSystem(hadoopConf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
   /** Lists all files and directories under `dir` (the root itself is not an
     * entry). Trailing slashes on `dir` are ignored, matching the
     * reference's `dir.rstrip("/")` (/root/reference/dirhash.py:323).
@@ -29,7 +42,7 @@ object Listing {
   def list(dir: String, hadoopConf: Configuration): Seq[FileEntry] = {
     val rootStr = stripTrailingSlashes(dir)
     val rootPath = new Path(rootStr)
-    val fs = rootPath.getFileSystem(hadoopConf)
+    val fs = fileSystem(rootPath, hadoopConf)
     val rootUriPath = fs.getFileStatus(rootPath).getPath.toUri.getPath
     val out = Seq.newBuilder[FileEntry]
 

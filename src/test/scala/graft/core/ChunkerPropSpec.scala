@@ -94,22 +94,42 @@ class ChunkerPropSpec extends AnyFunSuite {
     }
   }
 
-  test("property: distributed plan == driver plan (forced via driverSpecLimit 0)") {
-    import graft.fs.FileEntry
+  // Names whose UTF-8 byte order differs from Java's UTF-16 order (the
+  // astral U+1F600 sorts after U+FF21 in bytes, before it in UTF-16) and
+  // from path-segment order ("a.txt" < "a/x" because '.' < '/'). Synthetic
+  // entries: no file is written, so the JVM's file-name encoding is moot.
+  private val names = Seq("a.txt", "a/x", "a/", "a-b", "b c", "\uFF21",
+    "\uD83D\uDE00", "\uFFFD.bin", "z/", "z/\uD83D\uDE00", "z/\uFF21")
+  private val entryLists: Gen[Seq[FileEntry]] = for {
+    picked <- Gen.someOf(names)
+    lens <- Gen.listOfN(picked.size, sizes)
+    seed <- Gen.long
+  } yield new scala.util.Random(seed).shuffle(picked.toSeq.zip(lens).map {
+    case (n, len) => FileEntry(n, isDir = n.endsWith("/"), if (n.endsWith("/")) 0L else len)
+  })
+
+  test("property: planChunksDataset == planChunks in (utf8(relPath), idx) order") {
+    import scala.math.Ordering.Implicits.seqOrdering
     for {
-      size <- samples(sizes, 20)
-      block <- samples(blocks, 4)
+      entries <- samples(entryLists, 40)
+      block <- samples(blocks, 3)
     } {
-      val entries = Seq(FileEntry("a/f1", isDir = false, size),
-        FileEntry("f2", isDir = false, (size * 3) % 4097),
-        FileEntry("a", isDir = true, 0L),
-        FileEntry("empty", isDir = false, 0L))
       val driver = Chunker.planChunks("/r", entries, block)
-      val dist = Chunker.planChunksDataset(spark, "/r", entries, block,
-        driverSpecLimit = 0L).collect().toSeq
-      assert(dist.sortBy(s => (s.relPath, s.idx)) ==
-        driver.sortBy(s => (s.relPath, s.idx)),
-        s"plan mismatch at size=$size block=$block")
+      val expected = driver.sortBy(s =>
+        (s.relPath.getBytes("UTF-8").toSeq.map(_ & 0xff), s.idx))
+      assert(driver == expected, s"planChunks out of order: $entries")
+      val nChunks = Chunker.countChunks(entries, block)
+      assert(driver.size == nChunks)
+      assert(Chunker.planChunksDataset(spark, "/r", entries, block).collect().toSeq
+        == expected, s"Dataset plan mismatch: $entries at block=$block")
+      for (maxSlices <- Seq(1, 4, nChunks.toInt + 3)) {
+        val slices = Chunker.slices(entries, block, maxSlices)
+        assert(slices.size <= maxSlices && slices.forall(_.nonEmpty))
+        assert(slices.map(_.size).sum <= entries.count(!_.isDir) + slices.size)
+        val runs = slices.flatten.flatMap(r => (r.fromIdx until r.untilIdx).map((r.relPath, _)))
+        assert(runs == expected.map(s => (s.relPath, s.idx)),
+          s"slices at maxSlices=$maxSlices: $slices")
+      }
     }
   }
 
@@ -117,13 +137,12 @@ class ChunkerPropSpec extends AnyFunSuite {
     import graft.fs.FileEntry
     // 10 files × 1e6 chunks each: the old driver Seq would be 1e7
     // ChunkSpec objects (~1.5 GB with object headers + two boxed paths
-    // each); the Dataset plan never materializes them driver-side —
-    // lazy iterator flatMap per file, spot-checked at both extremes.
+    // each); the Dataset plan ships slices of chunk runs and expands them
+    // lazily on the executors, spot-checked at the far end.
     // (Planning needs sizes only; no bytes are read.)
     val entries = (0 until 10).map(i =>
       FileEntry(f"big$i%02d", isDir = false, 1000000L * 512))
-    val ds = Chunker.planChunksDataset(spark, "/r", entries, 512L,
-      driverSpecLimit = 1000L)
+    val ds = Chunker.planChunksDataset(spark, "/r", entries, 512L)
     assert(ds.count() == 10000000L)
     import spark.implicits._
     val last = ds.filter($"relPath" === "big09" && $"idx" === 999999L)

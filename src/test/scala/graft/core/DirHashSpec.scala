@@ -212,6 +212,90 @@ class DirHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally Files.delete(emptyRoot)
   }
 
+  /** The hash of a tree of one-chunk files, assembled by hand: listing,
+    * then one chunk digest per non-empty file, both in UTF-8 byte order. */
+  private def oneChunkTreeHex(files: Seq[(String, String)], dirs: Seq[String]): String = {
+    val zero = Array(0.toByte)
+    val h = Algos.get("sha256")
+    val listing = (files.map(_._1) ++ dirs).sorted(Listing.utf8Ordering)
+    h.update(listing.size.toString); h.update(zero)
+    h.update(listing.mkString("\u0000")); h.update(zero)
+    files.sortBy(_._1)(Listing.utf8Ordering).foreach { case (p, text) =>
+      val d = Algos.get("sha256")
+      d.update(p); d.update(zero); d.update("0"); d.update(zero); d.update(text)
+      h.update(d.digest())
+    }
+    Algos.hex(h.digest())
+  }
+
+  private def hashOfTree(files: Seq[(String, String)], dirs: Seq[String]): String = {
+    val tree = Files.createTempDirectory("dirhash-names")
+    try {
+      dirs.foreach(d => Files.createDirectories(tree.resolve(d)))
+      files.foreach { case (p, text) => Files.write(tree.resolve(p), text.getBytes("UTF-8")) }
+      DirHash.hashDirectoryRaw(spark, tree.toString, "sha256", 1024)
+    } finally graft.TestFiles.rmrf(tree)
+  }
+
+  test("user files named .*.crc are listed and hashed like any other file") {
+    // Hadoop's checksum file system would hide both .crc files from the
+    // listing and check `x` against `.x.crc`
+    val files = Seq("x" -> "hello", ".x.crc" -> "not a checksum", ".y.crc" -> "orphan",
+      "d/.z.crc" -> "nested")
+    assert(hashOfTree(files, Seq("d/")) == oneChunkTreeHex(files, Seq("d/")))
+  }
+
+  test("a colon in a file or directory name hashes like any other character") {
+    val files = Seq("a:b.txt" -> "colon", "c:d/e:f" -> "nested", "plain" -> "p")
+    assert(hashOfTree(files, Seq("c:d/")) == oneChunkTreeHex(files, Seq("c:d/")))
+  }
+
+  /** Jobs, stages and shuffle-write bytes of the Spark work `body` starts
+    * on this thread (tagged by a local property, so other threads' jobs
+    * are not counted). */
+  private def sparkWork(body: => Unit): (Int, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val key = "graft.test.work"
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(key) == tag) {
+          jobs.incrementAndGet()
+          js.stageIds.foreach(id => stageIds.add(id))
+        }
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(sc.stageInfo.stageId))
+          shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      // listenerBus is private[spark]: the reflective drain Round14OptSpec uses
+      try {
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      } catch { case _: Throwable => Thread.sleep(500L) }
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, stageIds.size, shuffleBytes.get)
+  }
+
+  test("a hash runs one Spark job of one stage and writes no shuffle bytes") {
+    // 32 MiB zeros at 1 MiB blocks: 36 chunks over 16 slices at local[4]
+    assert(sparkWork(DirHash.hashDirectoryRaw(spark, root.toString, "sha256", 1 << 20))
+      == ((1, 1, 0L)))
+    val emptyRoot = Files.createTempDirectory("dirhash-empty")
+    try {
+      val (jobs, stages, shuffle) =
+        sparkWork(DirHash.hashDirectoryRaw(spark, emptyRoot.toString, "sha256", 1024))
+      assert(jobs <= 1 && stages <= 1 && shuffle == 0L)
+    } finally Files.delete(emptyRoot)
+  }
+
   test("hash changes on rename, content change, and added empty dir") {
     val base = DirHash.hashDirectoryRaw(spark, root.toString, "sha256", 32L * 1024 * 1024)
     val extra = root.resolve("dir/anotherempty")
